@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Partitioning
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,9 +31,7 @@ object BloomProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: BloomProbe <sfDir>")
     val sfDir = args(0)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = Engine.session("graft-bloomprobe", cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-bloomprobe")
     import spark.implicits._
 
     val bytesRead = new java.util.concurrent.atomic.AtomicLong
@@ -58,9 +57,7 @@ object BloomProbe {
       // ~rows per output file at sf10 (60 M rows / ~10 input splits)
       .option("parquet.bloom.filter.expected.ndv#key", "8000000")
       .parquet(bloomPath)
-    def dirBytes(p: String): Long =
-      new java.io.File(p).listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(_.length()).sum
+    def dirBytes(p: String): Long = Partitioning.scanFootprint(p)._2
     val plainBytes = dirBytes(plainPath)
     val bloomBytes = dirBytes(bloomPath)
 

@@ -14,9 +14,7 @@ import org.apache.spark.sql.functions._
 object BpeVocabProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = Engine.session("bpe-vocab-probe",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("bpe-vocab-probe")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val wf = graft.operators.BpeTrain.wordFreqs(docs, "text")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -5,7 +5,7 @@ import graft.operators.TextDedup
 
 /** A/B + thread-scaling evidence for the native GearCdc expression
   * (the HtmlProbe/UrlSortProbe convention for every per-row native in
-  * a hot scan): `SPARK_GRAFT_CPUS=<n> runMain graft.CdcProbe <sf dir>`.
+  * a hot scan): `runMain graft.CdcProbe <sf dir>`.
   *
   * Measures (3 passes each, cached input):
   *   - native chunking over the FULL documents table (the ingest
@@ -13,14 +13,14 @@ import graft.operators.TextDedup
   *   - the replaced Column composition over the 1/32 sample (the old
   *     q_cdc_dedup cost; full-corpus composed would run ~10 min).
   *
-  * Run once at SPARK_GRAFT_CPUS=4 and once at 32: the per-thread
+  * Run once at 4 cores and once at 32: the per-thread
   * gear cache means no shared state, so chars/sec should scale with
   * threads (the round-11 java.util.regex cliff is what this guards
   * against). Merge the JSON lines into SCALE.md.
   */
 object CdcProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
+    val cpus = Engine.defaultCpus
     val spark = Engine.session("graft-cdcprobe", cpus)
     val sf = args(0)
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))

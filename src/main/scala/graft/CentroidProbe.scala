@@ -17,9 +17,7 @@ import graft.operators.Similarity
   */
 object CentroidProbe {
   def main(args: Array[String]): Unit = {
-    val spark = Engine.session("graft-centroidprobe",
-      sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-centroidprobe")
     val sf = args(0)
     val k = if (args.length > 1) args(1).toInt else 16
     val nprobe = if (args.length > 2) args(2).toInt else 2

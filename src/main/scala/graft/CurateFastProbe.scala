@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   */
 object CurateFastProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
+    val cpus = Engine.defaultCpus
     val spark = Engine.session("graft-curatefastprobe", cpus)
     val sf = args(0)
 

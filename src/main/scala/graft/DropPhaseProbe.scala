@@ -16,9 +16,7 @@ object DropPhaseProbe {
   private val phases = scala.collection.mutable.LinkedHashMap.empty[String, Double]
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("testdata-sf10")
-    val spark = Engine.session("graft-dropphase",
-      sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-dropphase")
     val root = java.nio.file.Files.createTempDirectory("dropphase").toString
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))

@@ -1,8 +1,11 @@
 package graft
 
+import graft.operators.Partitioning
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine — the one place a
+  * `SparkSession` is built, so every main, probe and test runs under
+  * the same configuration.
   *
   * Defaults chosen for the judge harness (local[32], 128 GiB) but the
   * knobs are the ones that matter on a real cluster too: AQE on (runtime
@@ -11,6 +14,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * hand rather than the 200 default.
   */
 object Engine {
+  /** Core count for sessions that do not pin one: `SPARK_GRAFT_CPUS`
+    * if set, else every core the JVM sees.
+    */
+  private[graft] val defaultCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Scale-adaptive initial shuffle bucket count (pre-AQE-coalesce).
     *
     * The r18 8 GiB sf10 rehearsal OOM'd with buckets pinned at `cpus`
@@ -28,31 +38,11 @@ object Engine {
     * sf0.1 (17.5 MB → `cpus`): the flat-256 regression reverts; at
     * sf10 (~1.75 GB → ~219): same regime as the flat 8× OOM fix.
     *
-    * `SPARK_GRAFT_INITIAL_SHUFFLE` overrides for cluster tuning and
-    * A/B runs; callers that cannot name a data dir keep the `cpus * 8`
-    * middle ground.
+    * Callers that cannot name a data dir keep the `cpus * 8` middle
+    * ground of [[confs]].
     */
   def initialShufflePartitions(cpus: Int, dataDir: String): Int =
-    sys.env.get("SPARK_GRAFT_INITIAL_SHUFFLE").map(_.toInt).getOrElse {
-      val bytes =
-        try {
-          val p = java.nio.file.Paths.get(dataDir)
-          if (java.nio.file.Files.isDirectory(p)) {
-            val s = java.nio.file.Files.walk(p)
-            try {
-              val it = s.iterator()
-              var sum = 0L
-              while (it.hasNext) {
-                val f = it.next()
-                if (java.nio.file.Files.isRegularFile(f))
-                  sum += java.nio.file.Files.size(f)
-              }
-              sum
-            } finally s.close()
-          } else 0L
-        } catch { case _: Throwable => 0L }
-      sizeInitialPartitions(cpus, bytes)
-    }
+    sizeInitialPartitions(cpus, Partitioning.scanFootprint(dataDir)._2)
 
   /** The pure sizing rule behind [[initialShufflePartitions]]:
     * one initial bucket per 8 MiB of on-disk input, clamped to
@@ -61,95 +51,91 @@ object Engine {
     math.max(cpus.toLong,
       math.min(bytes / (8L << 20), cpus.toLong * 32L)).toInt
 
-  /** `extraConfs` are applied LAST (they win over the defaults) — for
-    * probe-specific static confs that must be set before the session
-    * exists (e.g. codegen cache sizing), so probes can reuse this
-    * factory instead of hand-rolling a builder that drifts.
+  /** Every conf [[session]] sets for a `local[cpus]` session. */
+  private[graft] def confs(cpus: Int): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    // Pre-coalesce shuffle bucket count ABOVE the core count, so AQE
+    // sizes reduce-side partitions from data volume instead of being
+    // pinned at `cpus`. With 32 buckets a 10×-scale hash aggregate
+    // lands ~2^24 keys in ONE task (its BytesToBytesMap doubles to a
+    // 128 MiB pointer array; 32 such tasks under an 8 GiB heap OOM'd
+    // the r18 full-surface rehearsal on q_inc_clusters' pair stream).
+    // With 8×cpus initial buckets the same stage's per-task state is
+    // 8× smaller and spills incrementally; small shuffles still
+    // coalesce back to ~cpus (parallelismFirst), so sf0.1 plans keep
+    // their shape. Streaming state-store layout is untouched — it
+    // keys on spark.sql.shuffle.partitions, which stays `cpus`, so
+    // existing checkpoints keep restoring. This is the local stand-in
+    // for the cluster-side rule: initial shuffle partitions track
+    // data scale (files.maxPartitionBytes-ish), AQE owns the final
+    // count. Callers with a known input dir (Bench, Verify) override
+    // it with [[initialShufflePartitions]] via `extraConfs`.
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> (cpus * 8).toString,
+    // AQE coalesce floor 1 MiB → 128 KiB: the default folds every
+    // sub-MiB shuffle to ONE task, serializing compute-dense reduce
+    // stages (posting-list pair explode, CC star rounds, banded
+    // verify) whose per-byte CPU is huge — QStagesProbe showed
+    // q_inc_curate's 0.8-1.0 MB pair stages each running 0.2-0.65 s
+    // in a single task. 128 KiB keeps those stages at ~6-8 tasks
+    // while still folding genuinely tiny (<128 KiB) shuffles to one.
+    // Measured (18-query cluster/curate family, sf0.1, two runs per
+    // arm, per-query min): 45.6 s → 40.8 s (−10%), 15/18 queries
+    // improve, worst regression +0.5 s (md5 panel twins). Scale-safe:
+    // a fixed per-task byte floor, not a core-count constant — at
+    // production shuffle sizes the 64 MiB advisory target governs
+    // and this floor is unreachable.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "131072",
+    "spark.sql.session.timeZone" -> "UTC",
+    // testdata events.parquet carries TIMESTAMP(NANOS); Spark only
+    // supports micros — read nanos as long, Tables.events converts.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // Input parquet may carry isAdjustedToUTC=false micros (pyarrow's
+    // default for naive datetimes); read them as plain TimestampType
+    // under the UTC session rather than TIMESTAMP_NTZ, so timestamp
+    // functions (unix_millis, watermarks, windows) keep working and
+    // values match the oracle's naive-timestamp semantics.
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    // Write timestamps as annotated micros, not legacy INT96: INT96
+    // columns carry NO parquet min/max statistics, which silently
+    // disables row-group/file skipping on every time predicate — at
+    // 100 TB, the difference between reading a month and reading the
+    // whole table (measured: LayoutProbe, SCALE.md).
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+    // Align Spark's whole-stage-codegen bailout with HotSpot's JIT
+    // huge-method limit (-XX:DontCompileHugeMethods, 8000 bytecodes).
+    // The default (65535) happily keeps WSCG plans whose single
+    // generated processNext() exceeds 8000 bytecodes — HotSpot then
+    // refuses to JIT it and the hot loop runs in the BYTECODE
+    // INTERPRETER. Falling back to non-WSCG execution instead keeps
+    // per-expression codegen (each method small enough to JIT):
+    // measured on q_url_canon's projection tree (30+ regex/string ops
+    // + md5 nibbles + SortSegments over 4 M rows) 2.37 s → 0.99 s
+    // (UrlSortProbe, SCALE.md round-12 "the codegen that would not
+    // JIT"). Plans under 8000 bytecodes are untouched.
+    "spark.sql.codegen.hugeMethodLimit" -> "8000",
+    // Generated-class cache sized above the suite's distinct-plan
+    // count (static conf — must be set before the session exists).
+    // The 100-entry default LRU-thrashes on the wide md5-twin plans:
+    // every pass re-pays multi-second Janino compiles on a rotating
+    // set (CurateFastProbe measured 4.67 s for a path Bench times at
+    // ~2.4 in-suite before probes got this too).
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    "spark.ui.enabled" -> "false")
+
+  /** `extraConfs` are applied LAST (they win over [[confs]]) — for a
+    * caller's real differences that must be set before the session
+    * exists (warehouse dir, state-store provider, data-sized shuffle
+    * buckets).
     */
   def session(appName: String = "graft",
-              cpus: Int = Runtime.getRuntime.availableProcessors(),
+              cpus: Int = defaultCpus,
               extraConfs: Map[String, String] = Map.empty): SparkSession = {
-    val spark = extraConfs.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Pre-coalesce shuffle bucket count ABOVE the core count, so AQE
-      // sizes reduce-side partitions from data volume instead of being
-      // pinned at `cpus`. With 32 buckets a 10×-scale hash aggregate
-      // lands ~2^24 keys in ONE task (its BytesToBytesMap doubles to a
-      // 128 MiB pointer array; 32 such tasks under an 8 GiB heap OOM'd
-      // the r18 full-surface rehearsal on q_inc_clusters' pair stream).
-      // With 8×cpus initial buckets the same stage's per-task state is
-      // 8× smaller and spills incrementally; small shuffles still
-      // coalesce back to ~cpus (parallelismFirst), so sf0.1 plans keep
-      // their shape. Streaming state-store layout is untouched — it
-      // keys on spark.sql.shuffle.partitions, which stays `cpus`, so
-      // existing checkpoints keep restoring. This is the local stand-in
-      // for the cluster-side rule: initial shuffle partitions track
-      // data scale (files.maxPartitionBytes-ish), AQE owns the final
-      // count.
-      // (callers with a known input dir — Bench, Verify — pass the
-      // size-derived count via extraConfs / their own builders; see
-      // initialShufflePartitions above. The env override applies here
-      // too so probes can be A/B'd without a rebuild.)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_SHUFFLE", (cpus * 8).toString))
-      // AQE coalesce floor 1 MiB → 128 KiB: the default folds every
-      // sub-MiB shuffle to ONE task, serializing compute-dense reduce
-      // stages (posting-list pair explode, CC star rounds, banded
-      // verify) whose per-byte CPU is huge — QStagesProbe showed
-      // q_inc_curate's 0.8-1.0 MB pair stages each running 0.2-0.65 s
-      // in a single task. 128 KiB keeps those stages at ~6-8 tasks
-      // while still folding genuinely tiny (<128 KiB) shuffles to one.
-      // Measured (18-query cluster/curate family, sf0.1, two runs per
-      // arm, per-query min): 45.6 s → 40.8 s (−10%), 15/18 queries
-      // improve, worst regression +0.5 s (md5 panel twins). Scale-safe:
-      // a fixed per-task byte floor, not a core-count constant — at
-      // production shuffle sizes the 64 MiB advisory target governs
-      // and this floor is unreachable. Env override for A/B.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "131072"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata events.parquet carries TIMESTAMP(NANOS); Spark only
-      // supports micros — read nanos as long, Tables.events converts.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Input parquet may carry isAdjustedToUTC=false micros (pyarrow's
-      // default for naive datetimes); read them as plain TimestampType
-      // under the UTC session rather than TIMESTAMP_NTZ, so timestamp
-      // functions (unix_millis, watermarks, windows) keep working and
-      // values match the oracle's naive-timestamp semantics.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Write timestamps as annotated micros, not legacy INT96: INT96
-      // columns carry NO parquet min/max statistics, which silently
-      // disables row-group/file skipping on every time predicate — at
-      // 100 TB, the difference between reading a month and reading the
-      // whole table (measured: LayoutProbe, SCALE.md).
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // Align Spark's whole-stage-codegen bailout with HotSpot's JIT
-      // huge-method limit (-XX:DontCompileHugeMethods, 8000 bytecodes).
-      // The default (65535) happily keeps WSCG plans whose single
-      // generated processNext() exceeds 8000 bytecodes — HotSpot then
-      // refuses to JIT it and the hot loop runs in the BYTECODE
-      // INTERPRETER. Falling back to non-WSCG execution instead keeps
-      // per-expression codegen (each method small enough to JIT):
-      // measured on q_url_canon's projection tree (30+ regex/string ops
-      // + md5 nibbles + SortSegments over 4 M rows) 2.37 s → 0.99 s
-      // (UrlSortProbe, SCALE.md round-12 "the codegen that would not
-      // JIT"). Plans under 8000 bytecodes are untouched.
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // Generated-class cache sized above the suite's distinct-plan
-      // count (static conf — must be set before the session exists).
-      // The 100-entry default LRU-thrashes on the wide md5-twin plans:
-      // every pass re-pays multi-second Janino compiles on a rotating
-      // set (the Bench builder has carried this since round 2; probes
-      // built HERE were still paying it — CurateFastProbe measured
-      // 4.67 s for a path Bench times at ~2.4 in-suite before this).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-    ) { case (b, (k, v)) => b.config(k, v) }
+    val spark = (confs(cpus) ++ extraConfs)
+      .foldLeft(SparkSession.builder().master(s"local[$cpus]").appName(appName)) {
+        case (b, (k, v)) => b.config(k, v)
+      }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -280,10 +266,10 @@ object Tables {
     * [[graft.operators.Partitioning]]).
     */
   def lineitemWide(s: SparkSession, d: String): DataFrame =
-    graft.operators.Partitioning.fanOutSmallScan(
+    Partitioning.fanOutSmallScan(
       apply(s, d, "lineitem"), s"$d/lineitem.parquet")
   def eventsWide(s: SparkSession, d: String): DataFrame =
-    graft.operators.Partitioning.fanOutSmallScan(
+    Partitioning.fanOutSmallScan(
       events(s, d), s"$d/events.parquet")
 
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
@@ -301,7 +287,7 @@ object Tables {
     * decides from file metadata).
     */
   def documentsWide(s: SparkSession, d: String): DataFrame =
-    graft.operators.Partitioning.fanOutSmallScan(
+    Partitioning.fanOutSmallScan(
       apply(s, d, "documents"), s"$d/documents.parquet")
 
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
@@ -313,6 +299,6 @@ object Tables {
     * and keep the raw scan.
     */
   def embeddingsWide(s: SparkSession, d: String): DataFrame =
-    graft.operators.Partitioning.fanOutSmallScan(
+    Partitioning.fanOutSmallScan(
       apply(s, d, "embeddings"), s"$d/embeddings.parquet")
 }

@@ -20,9 +20,7 @@ package graft
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = Engine.session("graft-explain",
-      sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(8))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-explain")
     val sfDir = args(0)
     for (q <- args.drop(1)) {
       val df = SparkEntry.queries(q)(spark, sfDir)

@@ -17,7 +17,6 @@ object HtmlProbe {
 
     def run(cpus: Int, tag: String, f: Column => Column): Double = {
       val spark = Engine.session(s"graft-htmlprobe-$cpus", cpus)
-      spark.sparkContext.setLogLevel("WARN")
       val html = SparkEntry.docsWithSynthHtml(spark, sfDir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       html.count()

@@ -13,9 +13,7 @@ import org.apache.spark.sql.functions._
 object MinHashProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = Engine.session("minhash-probe",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("minhash-probe")
 
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

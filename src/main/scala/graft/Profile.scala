@@ -10,11 +10,7 @@ import graft.operators.{Graph, TextDedup}
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // the shared builder carries every parquet-compat pin (nanosAsLong,
-    // inferTimestampNTZ=false, TIMESTAMP_MICROS out) — a hand-rolled
-    // builder here drifted once already
     val spark = Engine.session("graft-profile", 32)
-    spark.sparkContext.setLogLevel("WARN")
 
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

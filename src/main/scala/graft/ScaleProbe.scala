@@ -15,8 +15,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/repo/testdata-sf10"
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = Engine.session("graft-scaleprobe", cpus)
+    val spark = Engine.session("graft-scaleprobe")
 
     val base = Tables.embeddings(spark, sfDir).select(
       col("vec_id").cast("long").as("vec_id"),

@@ -38,16 +38,8 @@ object ScalingProbe {
       .split(",").map(_.trim.toInt).toSeq.distinct.sorted(Ordering.Int.reverse)
     val queries = if (args.length > 2) args.drop(2).toSeq else DefaultQueries
 
-    // the PRODUCT session factory, so the curve measures the engine the
-    // queries actually run under (a hand-rolled builder here drifted
-    // once already); codegen cache sizing is the one probe-specific
-    // static conf, layered via extraConfs
-    def session(cpus: Int): SparkSession = Engine.session(
-      s"graft-scaling-$cpus", cpus,
-      extraConfs = Map("spark.sql.codegen.cache.maxEntries" -> "4096"))
-
     val perLevel = levels.map { n =>
-      val spark = session(n)
+      val spark = Engine.session(s"graft-scaling-$n", n)
       // codegen warmup at the smallest SF (class cache survives the
       // session restart — it is JVM-static — but plans re-resolve)
       queries.foreach { q =>

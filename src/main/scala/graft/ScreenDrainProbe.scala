@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Partitioning
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -53,7 +54,7 @@ object ScreenDrainProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/repo/testdata-sf10"
     val cycles = if (args.length > 1) args(1).toInt else 8
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
+    val cpus = Engine.defaultCpus
     val base = java.nio.file.Files.createTempDirectory("sdp").toString
     val spark = Engine.session("graft-screendrain", cpus, Map(
       "spark.sql.streaming.stateStore.providerClass" ->
@@ -64,7 +65,6 @@ object ScreenDrainProbe {
       // shuffled-hash plan (build = batch side) instead of sort-merge,
       // so the bucketed static side is neither re-shuffled NOR re-sorted
       "spark.sql.join.preferSortMergeJoin" -> "false"))
-    spark.sparkContext.setLogLevel("WARN")
 
     // read once through Tables so the post-stop eviction assert below
     // exercises the listener path on a populated cache
@@ -84,12 +84,7 @@ object ScreenDrainProbe {
     }
     val nChunks = math.min(cycles, parts.grouped(per).size)
 
-    def dirBytes(p: String): Long = {
-      val f = new java.io.File(p)
-      if (f.isFile) f.length()
-      else if (f.isDirectory) f.listFiles().map(c => dirBytes(c.getPath)).sum
-      else 0L
-    }
+    def dirBytes(p: String): Long = Partitioning.scanFootprint(p)._2
 
     def checksum(df: org.apache.spark.sql.DataFrame): (Long, BigDecimal) = {
       val r = df.agg(count(lit(1)),

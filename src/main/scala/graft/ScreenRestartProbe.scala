@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Partitioning
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -31,11 +32,9 @@ object ScreenRestartProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/repo/testdata-sf10"
     val maxFiles = if (args.length > 1) args(1).toInt else 4
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = Engine.session("graft-screenrestart", cpus, Map(
+    val spark = Engine.session("graft-screenrestart", extraConfs = Map(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
-    spark.sparkContext.setLogLevel("WARN")
 
     val docsDir = s"$sfDir/documents.parquet"
     val schema = spark.read.parquet(docsDir).schema
@@ -56,12 +55,7 @@ object ScreenRestartProbe {
         .start()
     }
 
-    def dirBytes(p: String): Long = {
-      val f = new java.io.File(p)
-      if (f.isFile) f.length()
-      else if (f.isDirectory) f.listFiles().map(c => dirBytes(c.getPath)).sum
-      else 0L
-    }
+    def dirBytes(p: String): Long = Partitioning.scanFootprint(p)._2
 
     // order-independent checksum over the full hit set, computed in
     // Spark (the CorpusRecoveryProbe convention — DECIMAL sum: a long

@@ -13,9 +13,7 @@ import org.apache.spark.sql.functions._
 object UrlSortProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/repo/testdata-sf10"
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = Engine.session("graft-urlsortprobe", cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-urlsortprobe")
 
     // hook contract: query string → full query part ("" or "?a=1&b=2")
     def hofSort(q: Column): Column = {

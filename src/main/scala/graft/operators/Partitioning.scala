@@ -1,6 +1,8 @@
 package graft.operators
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
 
 /** Parallelism repair for compute-dense tables behind unsplittable
   * scans (guide §2.5 "input skew: one huge unsplittable file ...
@@ -16,9 +18,9 @@ import org.apache.spark.sql.DataFrame
   * parent's partitioning, so whole version chains stay serial too.
   *
   * [[fanOutSmallScan]] round-robin-repartitions to a BYTE-SIZED width
-  * — one partition per [[fanBytesPerPartition]] of on-disk input,
-  * clamped to [2, defaultParallelism] — but ONLY when the scan cannot
-  * reach that width by itself (fewer files than the target) AND the
+  * — one partition per [[fanBytesPerPartition]] of on-disk input, at
+  * least 2 but never above defaultParallelism — but ONLY when the scan
+  * cannot reach that width by itself (fewer files than the target) AND the
   * table is small enough that the exchange is guaranteed cheap
   * (≤ `maxBytes`, default 1 GiB). At production scale a corpus scan
   * carries hundreds of splits and this is a no-op decided from file
@@ -39,8 +41,7 @@ import org.apache.spark.sql.DataFrame
   * 5.1→3.9); the single-pass pair-explode queries mildly prefer full
   * width (q_jaccard_pairs 1.32→1.52) — the global 128 KiB default
   * takes that documented trade. At production scale the rule is
-  * identical (no-op path). `SPARK_GRAFT_FAN_BYTES` overrides the
-  * divisor for A/B runs.
+  * identical (no-op path).
   *
   * Round-robin under `spark.sql.execution.sortBeforeRepartition`
   * (default) keeps row→partition assignment deterministic under task
@@ -55,24 +56,22 @@ import org.apache.spark.sql.DataFrame
   * the scan task), so lineitem/orders keep their raw scans.
   */
 object Partitioning {
-  /** Input bytes per fan-out partition (A/B override:
-    * `SPARK_GRAFT_FAN_BYTES`). See the width-sizing rationale above.
+  /** Input bytes per fan-out partition; see the width-sizing rationale
+    * above.
     */
-  private def fanBytesPerPartition: Long =
-    sys.env.get("SPARK_GRAFT_FAN_BYTES").map(_.toLong).getOrElse(128L << 10)
+  private val fanBytesPerPartition: Long = 128L << 10
 
-  /** The pure width rule: ceil(bytes / fanBytesPerPartition) clamped
-    * to [2, cpus]. Exposed for the spec.
+  /** The pure width rule: ceil(bytes / fanBytesPerPartition), at least
+    * 2, then capped at `cpus` — a 1-core session never fans out.
+    * Exposed for the spec.
     */
   private[graft] def fanWidth(cpus: Int, bytes: Long): Int = {
     val per = fanBytesPerPartition
-    math.max(2L, math.min(cpus.toLong, (bytes + per - 1) / per)).toInt
+    math.min(cpus.toLong, math.max(2L, (bytes + per - 1) / per)).toInt
   }
 
   def fanOutSmallScan(df: DataFrame, path: String,
                       maxBytes: Long = 1L << 30): DataFrame = {
-    // kill switch for interleaved wide-vs-raw A/B runs (no rebuild)
-    if (sys.env.contains("SPARK_GRAFT_FAN_DISABLE")) return df
     val cpus = df.sparkSession.sparkContext.defaultParallelism
     val (files, bytes) = scanFootprint(path)
     if (files > 0 && bytes <= maxBytes) {
@@ -81,29 +80,30 @@ object Partitioning {
     } else df
   }
 
-  /** (regular file count, total bytes) under `path` — a file counts as
+  /** (data file count, total bytes) under `path` — a file counts as
     * one scan slot (single-row-group parquet does not split further).
+    * Spark's `_SUCCESS`/`_metadata` markers and hidden `.crc` checksums
+    * are not data and are skipped; an unreadable or missing path reads
+    * as empty. Also sizes `Engine.initialShufflePartitions`.
     */
-  private def scanFootprint(path: String): (Long, Long) =
+  private[graft] def scanFootprint(path: String): (Long, Long) =
     try {
-      val p = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.isRegularFile(p))
-        (1L, java.nio.file.Files.size(p))
-      else if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.walk(p)
+      val p = Paths.get(path)
+      if (Files.isRegularFile(p)) (1L, Files.size(p))
+      else if (Files.isDirectory(p)) {
+        val s = Files.walk(p)
         try {
           var n = 0L; var b = 0L
           val it = s.iterator()
           while (it.hasNext) {
             val f = it.next()
-            if (java.nio.file.Files.isRegularFile(f) &&
-                !f.getFileName.toString.startsWith("_") &&
-                !f.getFileName.toString.startsWith(".")) {
-              n += 1; b += java.nio.file.Files.size(f)
+            val name = f.getFileName.toString
+            if (Files.isRegularFile(f) && !name.startsWith("_") && !name.startsWith(".")) {
+              n += 1; b += Files.size(f)
             }
           }
           (n, b)
         } finally s.close()
       } else (0L, 0L)
-    } catch { case _: Throwable => (0L, 0L) }
+    } catch { case NonFatal(_) => (0L, 0L) }
 }

@@ -15,8 +15,7 @@ class PartitioningSpec extends SparkSpec {
 
   test("small single-file scan fans out to the byte-sized width") {
     val docs = Tables.documents(spark, sf)
-    val bytes = java.nio.file.Files.size(
-      java.nio.file.Paths.get(s"$sf/documents.parquet"))
+    val (_, bytes) = Partitioning.scanFootprint(s"$sf/documents.parquet")
     val wide = Partitioning.fanOutSmallScan(docs, s"$sf/documents.parquet")
     assert(wide.rdd.getNumPartitions ==
       Partitioning.fanWidth(spark.sparkContext.defaultParallelism, bytes),
@@ -37,6 +36,23 @@ class PartitioningSpec extends SparkSpec {
     // cap: width never exceeds the session parallelism
     assert(Partitioning.fanWidth(32, 1L << 30) == 32)
     assert(Partitioning.fanWidth(8, 1L << 30) == 8)
+    // the floor never lifts the width above a 1-core session
+    assert(Partitioning.fanWidth(1, 1L << 30) == 1)
+  }
+
+  test("scanFootprint counts data files only, not markers or checksums") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-footprint")
+    def put(name: String, n: Int): Unit =
+      java.nio.file.Files.write(dir.resolve(name), Array.fill[Byte](n)(1)): Unit
+    put("part-00000.parquet", 1000)
+    put("part-00001.parquet", 234)
+    put("_SUCCESS", 7)
+    put(".part-00000.parquet.crc", 16)
+    put(".part-00001.parquet.crc", 12)
+    assert(Partitioning.scanFootprint(dir.toString) == ((2L, 1234L)))
+    assert(Partitioning.scanFootprint(dir.resolve("part-00001.parquet").toString)
+      == ((1L, 234L)))
+    assert(Partitioning.scanFootprint("/nonexistent-dir-xyz") == ((0L, 0L)))
   }
 
   test("no-op when the table exceeds the byte cap or path is missing") {
