@@ -4,7 +4,7 @@ import graft.operators.Partitioning
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session factory for the graft engine — the one place a
-  * `SparkSession` is built, so every main, probe and test runs under
+  * `SparkSession` is built, so every main and test runs under
   * the same configuration.
   *
   * Defaults chosen for the judge harness (local[32], 128 GiB) but the
@@ -119,8 +119,8 @@ object Engine {
     // count (static conf — must be set before the session exists).
     // The 100-entry default LRU-thrashes on the wide md5-twin plans:
     // every pass re-pays multi-second Janino compiles on a rotating
-    // set (CurateFastProbe measured 4.67 s for a path Bench times at
-    // ~2.4 in-suite before probes got this too).
+    // set (measured: the isolated xxhash64 curation path ran 4.67 s
+    // where Bench took ~2.4 s, BASELINE.md).
     "spark.sql.codegen.cache.maxEntries" -> "4096",
     "spark.ui.enabled" -> "false")
 
@@ -173,7 +173,7 @@ object Tables {
     * `session.stop()` stops the shared context, so context end is the
     * session-death signal), and every cache miss also sweeps
     * already-stopped entries. Without eviction, a long-lived driver
-    * that creates/stops many sessions (the probe pattern) would retain
+    * that creates/stops many sessions would retain
     * each dead session's resolved `FileIndex`es for the JVM lifetime.
     */
   private val relCache =
@@ -185,7 +185,7 @@ object Tables {
     * evicted. The sweep mechanics are predicate-driven so tests can
     * exercise them against a LIVE session (a spec cannot stop the
     * suite-shared SparkContext; the listener-fired stop path is
-    * asserted end-to-end in ScreenDrainProbe, which owns its JVM).
+    * asserted in RelCacheSpec's child JVM, which owns its context).
     */
   def evictWhere(p: SparkSession => Boolean): Int = {
     var n = 0

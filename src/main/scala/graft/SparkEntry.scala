@@ -27,6 +27,22 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Reconciliation.detail(spark, "/root/testdata/sf0.001")
 
+  /** q3_top10's body over arbitrary sources, so the bucketed layout
+    * (PlanAuditSpec) runs the same plan as the registered query.
+    */
+  private[graft] def q3Top10(l0: DataFrame, o0: DataFrame, c0: DataFrame): DataFrame = {
+    val c = c0.filter(col("c_mktsegment") === "BUILDING")
+    val o = o0.filter(col("o_orderdate") < lit("1998-07-01").cast("timestamp"))
+    val l = l0.filter(col("l_shipdate") > lit("1998-07-01").cast("timestamp"))
+    l.join(o, l("l_orderkey") === o("o_orderkey"))
+      .join(broadcast(c), o("o_custkey") === c("c_custkey"))
+      .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
+      .agg(Compat.exactSum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
+        .as("revenue"))
+      .orderBy(col("revenue").desc, col("l_orderkey"))
+      .limit(10)
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- §2.8 aggregations -------------------------------------------
     "q1_agg" -> ((s, d) => {
@@ -44,18 +60,8 @@ object SparkEntry {
           count(lit(1)).as("count_order"))
         .orderBy("l_returnflag", "l_linestatus")
     }),
-    "q3_top10" -> ((s, d) => {
-      val c = Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING")
-      val o = Tables.orders(s, d).filter(col("o_orderdate") < lit("1998-07-01").cast("timestamp"))
-      val l = Tables.lineitem(s, d).filter(col("l_shipdate") > lit("1998-07-01").cast("timestamp"))
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(Compat.exactSum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4)
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-    }),
+    "q3_top10" -> ((s, d) =>
+      q3Top10(Tables.lineitem(s, d), Tables.orders(s, d), Tables.customer(s, d))),
     "q_a2_sortedset" -> ((s, d) =>
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
@@ -1872,9 +1878,8 @@ object SparkEntry {
           Tables.documentsWide(s, d), "text", "doc_id")
         .orderBy("doc_id")),
     // The PRODUCTION fast path in isolation (xxhash64 MinHash+LSH →
-    // CC → gates, no verification twin) is measured by
-    // graft.CurateFastProbe, NOT registered here: its kept set is
-    // engine-specific (no DuckDB replay for xxhash64), so a queries
+    // CC → gates, no verification twin) is NOT registered here: its
+    // kept set is engine-specific (no DuckDB replay for xxhash64), so a queries
     // entry can only ever be a permanent no-oracle row in the driver
     // ledger (r13 verdict item 2). Correctness rides on q_curate_lsh's
     // oracled ≤1%-disagreement verdict + the portable twin
@@ -2545,20 +2550,6 @@ object SparkEntry {
     * 5 TLDs → 60 registrable domains, so the per-domain cap is active
     * at every SF. Replayed bit-identically by [[urlDomainCtes]].
     */
-  /** Probe hook: q_url_canon's input frame (documents + synthetic URL)
-    * — UrlSortProbe A/Bs param-sort variants over the identical tree.
-    */
-  def docsWithSynthUrl(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"))
-      .withColumn("url", synthUrl(col("doc_id")))
-
-  /** Probe hook: q_html_extract's input frame (documents + synthesized
-    * page) — HtmlProbe A/Bs the native extractor against the chain.
-    */
-  def docsWithSynthHtml(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"), col("text"))
-      .select(col("doc_id"), synthHtml(col("doc_id"), col("text")).as("html"))
-
   private def synthUrl(id: Column): Column = {
     val h = md5(id.cast("string"))
     def nib(i: Int): Column = conv(substring(h, i, 1), 16, 10).cast("int")

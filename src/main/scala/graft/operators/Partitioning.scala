@@ -80,11 +80,18 @@ object Partitioning {
     } else df
   }
 
+  /** Spark's rule for what a data file is: `_SUCCESS`/`_metadata`
+    * markers and hidden `.crc` checksums start with `_` or `.`, and
+    * Spark's file index skips them the same way.
+    */
+  private[graft] def isDataFile(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
+
   /** (data file count, total bytes) under `path` — a file counts as
     * one scan slot (single-row-group parquet does not split further).
-    * Spark's `_SUCCESS`/`_metadata` markers and hidden `.crc` checksums
-    * are not data and are skipped; an unreadable or missing path reads
-    * as empty. Also sizes `Engine.initialShufflePartitions`.
+    * Non-data files ([[isDataFile]]) are skipped; an unreadable or
+    * missing path reads as empty. Also sizes
+    * `Engine.initialShufflePartitions`.
     */
   private[graft] def scanFootprint(path: String): (Long, Long) =
     try {
@@ -97,8 +104,7 @@ object Partitioning {
           val it = s.iterator()
           while (it.hasNext) {
             val f = it.next()
-            val name = f.getFileName.toString
-            if (Files.isRegularFile(f) && !name.startsWith("_") && !name.startsWith(".")) {
+            if (Files.isRegularFile(f) && isDataFile(f.getFileName.toString)) {
               n += 1; b += Files.size(f)
             }
           }

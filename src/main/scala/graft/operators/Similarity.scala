@@ -577,7 +577,8 @@ object Similarity {
     // vary per cluster, and raw data-point centroid sets have norms ≫ 1,
     // so an unnormalized dot is not the documented cosine and inertia
     // values were not comparable across centroid SOURCES (caught by
-    // CentroidProbe reading a better-recall fit as "worse" inertia)
+    // the CENTROID_RECALL.json run reading a better-recall fit as
+    // "worse" inertia)
     val cent = normalized(centroids.select(col("cent_id").as("_cid"),
         col("centroid")), "_cid", "centroid", "cent_id", "centv")
     v.crossJoin(broadcast(cent))

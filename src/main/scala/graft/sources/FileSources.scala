@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.operators.Partitioning
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -81,10 +82,15 @@ object FileSources {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val head = {
-      val matches = fs.globStatus(p)
-      val f = if (matches != null && matches.nonEmpty) matches.head.getPath else p
+      // sniff a data file, never a `_SUCCESS` marker or `.crc` checksum
+      // that happens to list first
+      val f = Option(fs.globStatus(p)).getOrElse(Array.empty).map(_.getPath)
+        .find(q => Partitioning.isDataFile(q.getName)).getOrElse(p)
       val st = if (fs.getFileStatus(f).isDirectory)
-        fs.listStatus(f).filter(_.isFile).head.getPath else f
+        fs.listStatus(f).filter(s => s.isFile && Partitioning.isDataFile(s.getPath.getName))
+          .map(_.getPath).sortBy(_.getName).headOption
+          .getOrElse(throw new IllegalArgumentException(s"csvUtf16: no data file under $path"))
+      else f
       val in = fs.open(st)
       try {
         val len = math.min(fs.getFileStatus(st).getLen, 8192L).toInt

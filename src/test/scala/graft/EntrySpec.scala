@@ -20,10 +20,10 @@ class EntrySpec extends SparkSpec {
     // A query registered without an oracle becomes a PERMANENT non-green
     // row in the driver's correctness ledger (the q_curate_fast lesson:
     // rows-only checks read as weak coverage). Engine-specific outputs
-    // DuckDB can't mirror belong in GoldenGen or a probe main, not here.
+    // DuckDB can't mirror belong in GoldenGen or a spec, not here.
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty,
-      s"query without oracle (deregister to a probe or add SQL): $missing")
+      s"query without oracle (deregister it or add SQL): $missing")
   }
 
   test("all queries run and return rows on sf0.001 (except anti-join)") {

@@ -5,8 +5,8 @@ package graft
   * dies. A spec cannot stop the suite-shared SparkContext (in Spark,
   * `session.stop()` stops the context every suite in this JVM shares),
   * so the sweep mechanics are pinned here against live sessions via
-  * the predicate form, and the real listener-fired stop path is
-  * asserted end-to-end in ScreenDrainProbe after `spark.stop()`.
+  * the predicate form, and the real listener-fired stop path runs in a
+  * child JVM ([[RelCacheStop]]) that owns its context.
   */
 class RelCacheSpec extends SparkSpec {
 
@@ -52,5 +52,36 @@ class RelCacheSpec extends SparkSpec {
     Tables.evictWhere(_ eq child)
     assert(Tables.nation(child, sf).count() > 0)
     assert(Tables.cachedPaths(child).contains(s"$sf/nation.parquet"))
+  }
+
+  test("a really stopped session is swept by the application-end listener (child JVM)") {
+    import scala.jdk.CollectionConverters._
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    // the inherited input arguments carry the --add-opens flags Spark needs
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq
+    val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-Xmx1g",
+      "-cp", System.getProperty("java.class.path"), "graft.RelCacheStop", sf)
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+    assert(p.waitFor() == 0, s"child JVM failed:\n${out.takeRight(4000)}")
+  }
+}
+
+/** Child-JVM half of RelCacheSpec: reads one table through `Tables`,
+  * stops the session for real and exits non-zero if the cache kept
+  * any entry for it. Usage: `RelCacheStop <sfDir>`.
+  */
+object RelCacheStop {
+  def main(args: Array[String]): Unit = {
+    val spark = Engine.session("graft-relcache-stop", 1)
+    Tables.region(spark, args(0)).count()
+    require(Tables.cachedPaths(spark).nonEmpty, "the read did not populate the cache")
+    spark.stop()
+    val left = Tables.cachedPaths(spark)
+    if (left.nonEmpty) {
+      System.err.println(s"Tables.relCache retained $left for a stopped session")
+      sys.exit(1)
+    }
   }
 }

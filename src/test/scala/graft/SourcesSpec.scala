@@ -140,6 +140,30 @@ class SourcesSpec extends SparkSpec {
     assert(df.orderBy("v").head().getString(0) == "ä")
   }
 
+  test("UTF-16 CSV directory: the BOM/CRLF sniff skips _SUCCESS and .crc files") {
+    // a Spark/Hadoop output dir: the part file goes through the checksummed
+    // local FS (which writes its `.crc` sidecar) beside an empty _SUCCESS
+    val dir = Files.createTempDirectory("u16dir")
+    Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new org.apache.hadoop.fs.Path(dir.resolve("part-00000-x.csv").toString))
+    try out.write("k,v\r\nä,1\r\nb,2\r\n".getBytes(StandardCharsets.UTF_16)) // BE + BOM
+    finally out.close()
+    assert(Files.exists(dir.resolve(".part-00000-x.csv.crc")), "fixture needs the .crc sidecar")
+
+    val df = FileSources.csvUtf16(spark, dir.toString)
+    assert(df.columns.toSeq == Seq("k", "v"), df.columns.toSeq.toString)
+    val rows = df.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.head).toSeq
+    assert(rows == Seq(Seq("b", "2"), Seq("ä", "1")), rows.toString)
+    // a glob over the same dir matches _SUCCESS first in sorted order
+    assert(FileSources.csvUtf16(spark, s"$dir/*").columns.toSeq == Seq("k", "v"))
+
+    val empty = Files.createTempDirectory("u16empty")
+    Files.write(empty.resolve("_SUCCESS"), Array.emptyByteArray)
+    val e = intercept[IllegalArgumentException](FileSources.csvUtf16(spark, empty.toString))
+    assert(e.getMessage.contains(empty.toString), e.getMessage)
+  }
+
   test("UTF-8-BOM CSV scan (S3): BOM does not leak into the first header") {
     val dir = Files.createTempDirectory("u8bom").toString
     Files.write(Paths.get(s"$dir/sig.csv"),
@@ -248,7 +272,9 @@ class SourcesSpec extends SparkSpec {
     val part = FileSources.jdbcPartitioned(spark, url, "StudyAnalytics",
       "TASK_DAYS_OPEN", 0L, 10L, 3)
     assert(part.rdd.getNumPartitions == 3)
-    assert(part.count() == 5)
+    assert(part.collect().map(_.toString).sorted.toSeq ==
+      df.collect().map(_.toString).sorted.toSeq,
+      "striped read must return exactly the single-connection rows")
     // filter pushdown survives the JDBC boundary
     val filtered = FileSources.jdbc(spark, url, "StudyAnalytics")
       .filter(col("TASK_DAYS_OPEN") > 4)

@@ -412,6 +412,93 @@ class StreamingDedupSpec extends SparkSpec {
     }
   }
 
+  test("nearDupScreenStateful on RocksDB: a batch interrupted in flight replays to the uninterrupted hit set") {
+    // A `query.stop()` mid-batch leaves the batch's offsets and sink
+    // files on disk but no commits/<n> marker. Deleting that marker is
+    // the same kill point, deterministically. The restarted query must
+    // replay the batch without a second sink write, then screen later
+    // files against the anchors the pre-kill batches installed.
+    import graft.streaming.CorpusStream
+    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.DecimalType
+    import java.nio.file.{Files, Path}
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val base = Files.createTempDirectory("screen-kill")
+      val docs = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+      // planted copies of docs 0-2 under fresh ids: 1000 lands in the
+      // replayed batch, 1001-1002 in the last batch after the restart
+      val planted = docs.filter(col("doc_id") < 3).withColumn("doc_id", col("doc_id") + 1000)
+      val all = docs.unionByName(planted)
+      val chunkOf = when(col("doc_id") === 1000, 1)
+        .when(col("doc_id") > 1000, 3).otherwise(col("doc_id") * 4 / 500).cast("int")
+      // four single-file chunks with increasing mtimes: one file per batch,
+      // in the same order for every run
+      val t0 = System.currentTimeMillis() - 600000L
+      val chunks: Seq[Path] = (0 until 4).map { i =>
+        val dir = base.resolve(s"staging$i")
+        all.filter(chunkOf === i).coalesce(1).write.parquet(dir.toString)
+        val part = Files.list(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+          .findFirst().get()
+        val f = Files.move(part, base.resolve(s"c$i.parquet"))
+        f.toFile.setLastModified(t0 + i * 10000L)
+        f
+      }
+      def land(dir: Path, cs: Seq[Path]): Unit = {
+        Files.createDirectories(dir)
+        cs.foreach(c => Files.createLink(dir.resolve(c.getFileName), c))
+      }
+      val schema = spark.read.parquet(chunks.head.toString).schema
+      def drain(src: Path, tag: String): Unit =
+        CorpusStream.nearDupScreenStateful(
+            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+              .parquet(src.toString))
+          .writeStream.format("parquet")
+          .option("path", s"$base/out-$tag")
+          .option("checkpointLocation", s"$base/ckpt-$tag")
+          .outputMode("append").trigger(Trigger.AvailableNow()).start()
+          .awaitTermination()
+      def checksum(tag: String): (Long, BigDecimal) = {
+        val r = spark.read.parquet(s"$base/out-$tag").agg(count(lit(1)),
+          coalesce(sum(xxhash64(col("doc_id"), col("dup_of"), col("band"))
+            .cast(DecimalType(38, 0))), lit(BigDecimal(0)))).head()
+        (r.getLong(0), BigDecimal(r.getDecimal(1)))
+      }
+
+      // uninterrupted reference: all four files, batches 0-3
+      land(base.resolve("src-ref"), chunks)
+      drain(base.resolve("src-ref"), "ref")
+      val refHits = spark.read.parquet(s"$base/out-ref")
+        .select("doc_id", "dup_of").distinct()
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(Set((1000L, 0L), (1001L, 1L), (1002L, 2L)).subsetOf(refHits),
+        s"planted duplicates missing from the reference hit set: $refHits")
+
+      // interrupted: batches 0-1 run, batch 1 loses its commit marker,
+      // the rest of the drop lands, and a new query resumes
+      val live = base.resolve("src-live")
+      land(live, chunks.take(2))
+      drain(live, "kill")
+      val commit = base.resolve("ckpt-kill/commits/1")
+      assert(Files.exists(commit), "batch 1 never committed")
+      Files.delete(commit)
+      // a marker never written has no checksum sibling either (a stale
+      // one fails the replay's commit as "concurrent checkpoint use")
+      Files.deleteIfExists(commit.resolveSibling(".1.crc"))
+      land(live, chunks.drop(2))
+      drain(live, "kill")
+
+      assert(checksum("kill") == checksum("ref"),
+        s"restart diverged: ${checksum("kill")} vs uninterrupted ${checksum("ref")}")
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("nearDupScreenStateful: batch-frame parity (state starts empty, min id anchors)") {
     import graft.streaming.CorpusStream
     val docs = Seq(
